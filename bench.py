@@ -504,83 +504,6 @@ def skew_bench(n_turns: int = 120_000) -> None:
     )
 
 
-def tier_split_bench(replicas: int = 20) -> None:
-    """A/B evidence for the round-5 native-expression tier
-    (operators/native_rules.py): interleaved python-only vs tiered
-    extraction over (a) the standard bench mix (~14% content-family share)
-    and (b) a content-heavy mix built by replicating the native-family
-    turns ``replicas``x (share ~0.68 at 20), reporting per-mode medians.
-
-    This bench exists to document a MEASURED NEGATIVE RESULT: the tiered
-    plan loses at BOTH shares, because whole-text Java-regex extraction of
-    the content families runs ~5x slower per row-core than the same rules
-    as compiled C regex inside the Arrow batch tier (~300-440us vs ~66us),
-    and the router adds a full marker-absence scan on top. There is no
-    crossover share: if the per-row native cost exceeds the per-row Python
-    cost on the SAME rows, raising the share only amplifies the loss. See
-    NEXT.md round-5 notes and the native_rules module docstring."""
-    import statistics
-
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.operators.extract import extract_turns
-    from pdf_extractor_spark.operators.native_rules import native_eligible
-    from pdf_extractor_spark.session import get_spark
-
-    load_start = _loadavg()
-    spark = get_spark("tiersplit", master=f"local[{CPUS}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = _bench_transcripts(spark, SF_DIR)
-
-    heavy = base
-    nat = base.where(native_eligible(F.col("text")))
-    for i in range(replicas):
-        heavy = heavy.unionByName(
-            nat.withColumn("conv_id", F.concat(F.col("conv_id"), F.lit(f"_r{i}")))
-        )
-    heavy = heavy.repartition(256).persist()
-
-    out = {}
-    for mix_name, df in (("bench_mix", base), ("content_heavy", heavy)):
-        n = df.count()
-        share = df.where(native_eligible(F.col("text"))).count() / n
-        py = extract_turns(df, native_tier=False)
-        ti = extract_turns(df, native_tier=True)
-        _force(py), _force(ti)  # warm both plans
-        pts: list[float] = []
-        tts: list[float] = []
-        for i in range(4):
-            # alternate order each rep so window drift hits both modes
-            order = ((py, pts), (ti, tts)) if i % 2 == 0 else ((ti, tts), (py, pts))
-            for frame, acc in order:
-                t0 = time.perf_counter()
-                _force(frame)
-                acc.append(time.perf_counter() - t0)
-        out[mix_name] = {
-            "n_turns": n,
-            "native_share": round(share, 3),
-            "python_only_sec": round(statistics.median(pts), 3),
-            "tiered_sec": round(statistics.median(tts), 3),
-            "python_all": [round(x, 3) for x in pts],
-            "tiered_all": [round(x, 3) for x in tts],
-            "tiered_speedup": round(statistics.median(pts) / statistics.median(tts), 3),
-        }
-    spark.stop()
-    _emit(
-        {
-            "metric": "native_tier_split_ab",
-            "value": out["content_heavy"]["tiered_speedup"],
-            "unit": "x_speedup_at_high_share",
-            "mixes": out,
-            "verdict": "negative: tiered loses at both shares (see docstring)"
-            if max(m["tiered_speedup"] for m in out.values()) < 1.0
-            else "tiered wins at least one mix",
-            "cpus": int(CPUS),
-            "window": _window_health(load_start),
-        }
-    )
-
-
 def _curate_corpus(spark, n_docs: int):
     """Deterministic documents-shaped corpus with CONTROLLED duplication and
     quality classes, sized for the curation ladder (the sf0.1 documents
@@ -833,6 +756,38 @@ def _components_pressure_child(algo: str, level: str, n_edges: int) -> None:
         shutil.rmtree(log_dir, ignore_errors=True)
 
 
+def _pressure_cell(algo: str, level: str, heap: str, n_edges: int) -> dict:
+    """Run one components_pressure cell in a child JVM. An OOM, a crash or
+    a timeout is the cell's recorded status, never an exception."""
+    row = {"algo": algo, "round_checkpoint_level": level, "heap": heap}
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM=heap, SPARK_GRAFT_ARTIFACT_DIR="")
+    try:
+        proc = subprocess.run(
+            [sys.executable, __file__, "--components-pressure-child", algo, level, str(n_edges)],
+            capture_output=True,
+            text=True,
+            env=env,
+            timeout=1800,
+        )
+    except subprocess.TimeoutExpired:
+        row["status"] = "timeout"
+        return row
+    line = next(
+        (l for l in proc.stdout.splitlines() if l.startswith('{"status"')), None
+    )
+    if proc.returncode == 0 and line:
+        row.update(json.loads(line))
+    else:
+        err = (proc.stderr or "")[-4000:]
+        row["status"] = (
+            "OOM" if "OutOfMemoryError" in err or "OutOfMemoryError" in proc.stdout else f"failed rc={proc.returncode}"
+        )
+        # the last ERROR line tells WHERE it died (stage = which round)
+        err_lines = [l for l in err.splitlines() if "ERROR" in l or "Error" in l]
+        row["error_tail"] = err_lines[-1][:300] if err_lines else err[-300:]
+    return row
+
+
 def components_pressure(n_edges: int = 10_000_000) -> None:
     """Components near the sandbox's memory envelope (r4 VERDICT #8): a
     10^7-edge seeded chain graph (adversarial diameter) across a
@@ -854,28 +809,7 @@ def components_pressure(n_edges: int = 10_000_000) -> None:
     ]
     results = []
     for algo, level, heap in cells:
-        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM=heap, SPARK_GRAFT_ARTIFACT_DIR="")
-        proc = subprocess.run(
-            [sys.executable, __file__, "--components-pressure-child", algo, level, str(n_edges)],
-            capture_output=True,
-            text=True,
-            env=env,
-            timeout=1800,
-        )
-        row = {"algo": algo, "round_checkpoint_level": level, "heap": heap}
-        line = next(
-            (l for l in proc.stdout.splitlines() if l.startswith('{"status"')), None
-        )
-        if proc.returncode == 0 and line:
-            row.update(json.loads(line))
-        else:
-            err = (proc.stderr or "")[-4000:]
-            row["status"] = (
-                "OOM" if "OutOfMemoryError" in err or "OutOfMemoryError" in proc.stdout else f"failed rc={proc.returncode}"
-            )
-            # the last ERROR line tells WHERE it died (stage = which round)
-            err_lines = [l for l in err.splitlines() if "ERROR" in l or "Error" in l]
-            row["error_tail"] = err_lines[-1][:300] if err_lines else err[-300:]
+        row = _pressure_cell(algo, level, heap, n_edges)
         results.append(row)
         print(json.dumps(row))
     oks = [
@@ -990,8 +924,6 @@ if __name__ == "__main__":
         streaming_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 64)
     elif len(sys.argv) > 1 and sys.argv[1] == "--skew":
         skew_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 120_000)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--tier-split":
-        tier_split_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 20)
     elif len(sys.argv) > 1 and sys.argv[1] == "--curate":
         curate_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 200_000)
     elif len(sys.argv) > 1 and sys.argv[1] == "--components-pressure-child":

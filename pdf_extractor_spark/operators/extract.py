@@ -1,51 +1,32 @@
-"""The extraction operator: transcripts -> extracted_turns via mapInPandas.
+"""The extraction operator: transcripts -> extracted_turns via mapInArrow.
 
 Design (SURVEY.md §3.1 'Spark shape'):
   - per-turn stateless rules => NO shuffle is required for extraction itself;
-    mapInPandas runs on the scan partitions (narrow), Arrow-batched.
+    mapInArrow runs on the scan partitions (narrow), one Arrow batch per call.
   - skew: optional salted repartition BEFORE the UDF spreads pathological
     input layouts (e.g. one file = one giant conversation) across executors
     (SURVEY §4 'Partitioning / shuffle' row).
   - ordering: stable (conv_id, turn_idx) order is applied ONCE at the sink
     (operators/order.py), not inside extraction — cheaper and skew-immune.
 
-The UDF calls rules.oracle.extract_turn — the exact function the golden
-oracle uses — so Spark output is byte-identical to the oracle by construction.
+This is the only extraction kernel: the batch bench, the streaming drain,
+the driver gates and the incremental job (operators/lineage.py) all reach
+the rules through ``extract_turns``. The UDF calls
+rules.oracle.extract_turn_batch, which returns exactly what the golden
+oracle's extract_turn returns per row, so Spark output is byte-identical to
+the oracle by construction.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Sequence
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from ..rules.oracle import extract_turn_batch
 from ..schema import EXTRACTED_TURNS
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body. Compiled regexes live at module import (once per
-    executor); the per-row work is C-regex dispatch, no driver-side Python."""
-    for pdf in batches:
-        results = extract_turn_batch(list(pdf["text"]))
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].astype("int32").values,
-                "family": [r.family for r in results],
-                "extracted_text": [r.extracted_text for r in results],
-                "spans": [
-                    [{"start": s, "end": e, "kind": k} for (s, e, k) in r.spans]
-                    for r in results
-                ],
-                "rule_hits": [r.rule_hits for r in results],
-                "n_records": pd.array([r.n_records for r in results], dtype="int32"),
-                "valid": [r.valid for r in results],
-                "problem_reason": [r.problem_reason for r in results],
-            }
-        )
-
 
 _SPAN_PA = None
 
@@ -66,10 +47,11 @@ def _arrow_types():
     return _SPAN_PA
 
 
-def _extract_batches_arrow(batches):
+def _extract_batches_arrow(batches, carry: tuple[str, ...] = ()):
     """mapInArrow body: builds output RecordBatches with pyarrow directly —
     skips the pandas hop entirely (measured ~2x cheaper output assembly than
-    DataFrame + from_pandas for the nested spans/rule_hits columns)."""
+    DataFrame + from_pandas for the nested spans/rule_hits columns). The
+    ``carry`` columns pass through untouched, ahead of the output columns."""
     import pyarrow as pa
 
     span_t, map_t = _arrow_types()
@@ -78,13 +60,14 @@ def _extract_batches_arrow(batches):
         # family-grouped evaluation (rules.oracle.extract_turn_batch): same
         # bytes per row, ~25% less wall from regex/branch cache locality
         results = extract_turn_batch(texts)
-        # coerce passthrough columns to the declared schema (an input with
-        # bigint turn_idx / non-string conv_id must behave exactly like the
-        # pandas variant's astype); no-op casts are zero-copy
+        # coerce key columns to the declared schema (an input with bigint
+        # turn_idx / non-string conv_id must still match EXTRACTED_TURNS);
+        # no-op casts are zero-copy
         conv_arr = rb.column(rb.schema.get_field_index("conv_id")).cast(pa.string())
         idx_arr = rb.column(rb.schema.get_field_index("turn_idx")).cast(pa.int32())
         yield pa.record_batch(
             [
+                *(rb.column(rb.schema.get_field_index(c)) for c in carry),
                 conv_arr,
                 idx_arr,
                 pa.array([r.family for r in results], pa.string()),
@@ -95,81 +78,30 @@ def _extract_batches_arrow(batches):
                 pa.array([r.valid for r in results], pa.bool_()),
                 pa.array([r.problem_reason for r in results], pa.string()),
             ],
-            names=[
-                "conv_id",
-                "turn_idx",
-                "family",
-                "extracted_text",
-                "spans",
-                "rule_hits",
-                "n_records",
-                "valid",
-                "problem_reason",
-            ],
+            names=[*carry, *EXTRACTED_TURNS.fieldNames()],
         )
 
 
 def extract_turns(
     transcripts: DataFrame,
     salt_partitions: int | None = None,
-    native_tier: bool = False,
-    native_ledger: bool = False,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """Run the extraction rules over a transcript DataFrame.
 
-    ``native_tier=True`` enables the two-tier plan (round 5): turns whose
-    family + charset are inside the proven native domain
-    (operators/native_rules.py — freeform, noisy_desc, NULL; plus
-    ledger_rows when ``native_ledger``) are extracted entirely JVM-side as
-    whole-text regexp Column expressions; everything else takes the
-    mapInArrow Python tier. Byte parity between the tiers is structural
-    (the native expressions re-express rules/oracle.extract_turn on a
-    guarded domain) and pinned by the goldens + tests/test_native_tier.py.
-
-    The tier is OFF by default — a MEASURED NEGATIVE RESULT, not a tuning
-    default: whole-text Java regex runs ~5x slower per row-core than the
-    same rules as compiled C regex in the Arrow batch tier, so the split
-    loses at EVERY content-family share (2.39s vs 2.03s at 14% share,
-    9.06s vs 3.49s at 68% — ``bench.py --tier-split``), and the router
-    adds a full marker-absence scan on top. The implementation stays
-    because it is the driver-oracled proof that the content families are
-    SQL-expressible (the correctness gate runs with the tier ON) and the
-    measured reference point for future plan decisions. ``native_ledger``
-    further routes ledger_rows natively; it is even slower (interpreted
-    per-line HOF arrays, see native_rules docstring) and exists as the
-    parity-tested reference plan, not a production route.
-
-    ``salt_partitions``: when set, repartition on (conv_id, salt) first —
-    the salt is pmod(hash(turn_idx), 16), breaking long-conversation skew
-    while keeping *some* conv locality (SURVEY §4). Leave None for inputs
+    ``salt_partitions``: when set, repartition on (conv_id, salt) first
+    (operators/order.salted), breaking long-conversation skew while keeping
+    *some* conv locality (SURVEY §4). Leave None for inputs
     already well-partitioned (Parquet/Iceberg splits are row-group sized).
+
+    ``carry``: input columns passed through unchanged, placed ahead of the
+    EXTRACTED_TURNS columns (the incremental job carries ``src_key``).
     """
-    from pyspark.sql import functions as F
-
-    cols = transcripts.select("conv_id", "turn_idx", "text")
+    carry = tuple(carry)
+    cols = transcripts.select(*carry, "conv_id", "turn_idx", "text")
     if salt_partitions:
         from .order import salted
 
         cols = salted(cols, salt_partitions)
-    if not native_tier:
-        return cols.mapInArrow(_extract_batches_arrow, schema=EXTRACTED_TURNS)
-
-    from .native_rules import native_eligible, native_extract
-
-    ok = native_eligible(F.col("text"), include_ledger=native_ledger)
-    native = native_extract(cols.where(ok), include_ledger=native_ledger)
-    rest = cols.where(~ok).mapInArrow(_extract_batches_arrow, schema=EXTRACTED_TURNS)
-    return native.unionByName(rest)
-
-
-def extract_turns_pandas(
-    transcripts: DataFrame, salt_partitions: int | None = None
-) -> DataFrame:
-    """mapInPandas variant (kept for comparison/debugging; extract_turns now
-    uses the cheaper mapInArrow path — identical results, golden-tested)."""
-    cols = transcripts.select("conv_id", "turn_idx", "text")
-    if salt_partitions:
-        from .order import salted
-
-        cols = salted(cols, salt_partitions)
-    return cols.mapInPandas(_extract_batches, schema=EXTRACTED_TURNS)
+    schema = T.StructType([*(cols.schema[c] for c in carry), *EXTRACTED_TURNS.fields])
+    return cols.mapInArrow(partial(_extract_batches_arrow, carry=carry), schema=schema)

@@ -26,42 +26,12 @@ map-side partial agg keyed by src_key (bounded fanout: #files x #rules).
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..rules.oracle import extract_turn
-from ..schema import EXTRACTED_TURNS, TRANSCRIPTS
-
-EXTRACTED_WITH_SRC = T.StructType(
-    [T.StructField("src_key", T.StringType(), False), *EXTRACTED_TURNS.fields]
-)
-
-
-def _extract_batches_with_src(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body carrying the source-file key through extraction."""
-    for pdf in batches:
-        results = [extract_turn(t) for t in pdf["text"]]
-        yield pd.DataFrame(
-            {
-                "src_key": pdf["src_key"].values,
-                "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].astype("int32").values,
-                "family": [r.family for r in results],
-                "extracted_text": [r.extracted_text for r in results],
-                "spans": [
-                    [{"start": s, "end": e, "kind": k} for (s, e, k) in r.spans]
-                    for r in results
-                ],
-                "rule_hits": [r.rule_hits for r in results],
-                "n_records": pd.array([r.n_records for r in results], dtype="int32"),
-                "valid": [r.valid for r in results],
-                "problem_reason": [r.problem_reason for r in results],
-            }
-        )
+from ..schema import TRANSCRIPTS
+from .extract import extract_turns
 
 
 def src_key_col() -> F.Column:
@@ -109,7 +79,7 @@ def pending_files(spark: SparkSession, input_dir: str, lineage_dir: str) -> Data
     )
 
 
-def _auto_salt(spark: SparkSession, scan, pend_df: DataFrame) -> int | None:
+def _auto_salt(spark: SparkSession, pend_df: DataFrame) -> int | None:
     """Cheap skew heuristic (r4 VERDICT #5: defense on by default): when the
     PENDING work would yield fewer input splits than the session's
     parallelism — the whale-file pathology, where one huge conversation
@@ -196,13 +166,12 @@ def run_incremental(
         F.broadcast(pend_df), "src_key", "left_semi"
     )
     if salt_partitions == "auto":
-        salt_partitions = _auto_salt(spark, scan, pend_df)
-    cols = transcripts.select("src_key", "conv_id", "turn_idx", "text")
-    if salt_partitions:
-        from .order import salted
-
-        cols = salted(cols, int(salt_partitions))
-    extracted = cols.mapInPandas(_extract_batches_with_src, schema=EXTRACTED_WITH_SRC)
+        salt_partitions = _auto_salt(spark, pend_df)
+    extracted = extract_turns(
+        transcripts,
+        salt_partitions=int(salt_partitions) if salt_partitions else None,
+        carry=("src_key",),
+    )
 
     # dynamic overwrite scoped to THIS write only — leaking it session-wide
     # would silently change later overwrite semantics for other writers

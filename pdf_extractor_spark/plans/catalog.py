@@ -401,40 +401,6 @@ def _event_window() -> Window:
     return Window.partitionBy("user_id").orderBy("ts", "event_id")
 
 
-def q_w2_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2 section forward-fill (bofa_bank_parser.py:93-108): last non-null
-    marker over the per-user ordered stream."""
-    ev = _t(spark, sf_dir, "events")
-    marker = F.when(
-        F.col("event_type") == "signup", F.col("event_id").cast("string")
-    )
-    w = _event_window().rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return ev.select(
-        "event_id",
-        F.last(marker, ignorenulls=True).over(w).alias("section_tag"),
-    )
-
-
-def q_w3_block_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3 block-id assignment: cumulative count of record-start lines
-    (wellsfargo_bank_parser.py:211-221)."""
-    ev = _t(spark, sf_dir, "events")
-    is_start = F.when(F.col("event_type") == "signup", 1).otherwise(0)
-    w = _event_window().rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return ev.select(
-        "event_id", F.sum(is_start).over(w).cast("long").alias("block_id")
-    )
-
-
-def q_w4_lookahead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4 continuation-line lookahead (first_republic_bank_parser.py:303-308):
-    lead() over the per-user ordered stream."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id", F.lead("event_type", 1).over(_event_window()).alias("next_type")
-    )
-
-
 def q_w6_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (stream-analysis analog of W3): new session
     when gap > 1h; session id = cumulative sum of boundary flags."""
@@ -587,43 +553,8 @@ def q_sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# registry
+# DuckDB oracle SQL (composed into the driver registry by plans/suites.py)
 # ---------------------------------------------------------------------------
-
-_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "p3_keyword_filter": q_p3_keyword_filter,
-    "p4_amount_threshold": q_p4_amount_threshold,
-    "p5_validity_quarantine": q_p5_validity_quarantine,
-    "p6_boilerplate_suppression": q_p6_boilerplate_suppression,
-    "r13_description_cleanup": q_r13_description_cleanup,
-    "r14_token_count": q_r14_token_count,
-    "r19_row_hash": q_r19_row_hash,
-    "r21_sequential_id": q_r21_sequential_id,
-    "r5_sign_normalization": q_r5_sign_normalization,
-    "r7_date_ladder": q_r7_date_ladder,
-    "j1_exact_join": q_j1_exact_join,
-    "j4_first_match_dispatch": q_j4_first_match_dispatch,
-    "o3_top1_per_key": q_o3_top1_per_key,
-    "a1_union_consolidation": q_a1_union_consolidation,
-    "a2_counts_per_source": q_a2_counts_per_source,
-    "a3_group_totals": q_a3_group_totals,
-    "a4_minmax_dates": q_a4_minmax_dates,
-    "a5_dedup_exact": q_a5_dedup_exact,
-    "tpch_q1_pricing_summary": q_tpch_q1_pricing_summary,
-    "tpch_q3_shipping": q_tpch_q3_shipping,
-    "tpch_q5_local_supplier": q_tpch_q5_local_supplier,
-    "tpch_q6_forecast": q_tpch_q6_forecast,
-    "w7_ranking_suite": q_w7_ranking_suite,
-    "w2_forward_fill": q_w2_forward_fill,
-    "w3_block_id": q_w3_block_id,
-    "w4_lookahead": q_w4_lookahead,
-    "w6_sessionize": q_w6_sessionize,
-    "st1_resume_antijoin": q_st1_resume_antijoin,
-    "text_stopword_ratio": q_text_stopword_ratio,
-    "text_quality_score": q_text_quality_score,
-    "dedup_unigram_jaccard": q_dedup_unigram_jaccard,
-    "sim_bruteforce_topk": q_sim_bruteforce_topk,
-}
 
 _STOP_SQL = "('the','a','of','and','to')"
 
@@ -809,28 +740,6 @@ _ORACLES: dict[str, str] = {
         GROUP BY o_orderkey
         ORDER BY revenue DESC, o_orderkey
         LIMIT 10
-    """,
-    "w2_forward_fill": """
-        SELECT event_id,
-               last_value(CASE WHEN event_type = 'signup'
-                               THEN CAST(event_id AS VARCHAR) END IGNORE NULLS)
-                 OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS section_tag
-        FROM events
-    """,
-    "w3_block_id": """
-        SELECT event_id,
-               CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                 AS block_id
-        FROM events
-    """,
-    "w4_lookahead": """
-        SELECT event_id,
-               lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                 AS next_type
-        FROM events
     """,
     "w6_sessionize": """
         WITH g AS (

@@ -10,8 +10,6 @@ statistically.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -762,21 +760,6 @@ _BPE_ORACLE = f"""
 """
 
 
-def q_j2_fuzzy_indel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 with EXACT rapidfuzz token_sort_ratio (InDel) semantics — the
-    pandas-UDF tier (operators/fuzzy.py). Rows-only gate entry: the LCS
-    scorer has no SQL mirror; exact values are pinned by
-    tests/test_fuzzy_indel.py against an independent InDel DP oracle."""
-    from ..operators.fuzzy import fuzzy_topk_indel
-
-    part = _t(spark, sf_dir, "part")
-    left = part.where((F.col("p_partkey") >= 50) & (F.col("p_partkey") < 250)).select(
-        "p_partkey", "p_name"
-    )
-    dim = part.where(F.col("p_partkey") < 50).select("p_name")
-    return fuzzy_topk_indel(left, dim, "p_partkey", "p_name", "p_name")
-
-
 def q_set_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set ops beyond the reference's union-all: customers appearing in both
     order halves (INTERSECT) and only in the first (EXCEPT), tagged."""
@@ -838,23 +821,6 @@ _TRIGRAM_ORACLE = """
     FROM p WHERE FLOOR(inter / un * 10000 + 0.5) / 10000.0 >= 0.8
 """
 
-
-QUERIES_EXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "set_intersect_except": q_set_intersect_except,
-    "dedup_trigram_jaccard": q_dedup_trigram_jaccard,
-    "j2_fuzzy_indel_topk": q_j2_fuzzy_indel_topk,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_minhash_full_capped": q_dedup_minhash_full_capped,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
-    "dedup_embedding_cosine": q_dedup_embedding_cosine,
-    "sim_ivf_topk": q_sim_ivf_topk,
-    "text_langid": q_text_langid,
-    "text_fingerprint": q_text_fingerprint,
-    "text_readability": q_text_readability,
-    "text_bpe_token_count": q_text_bpe_token_count,
-    "j2_fuzzy_topk": q_j2_fuzzy_topk,
-}
 
 ORACLES_EXT: dict[str, str] = {
     "set_intersect_except": _SETOPS_ORACLE,

@@ -13,7 +13,6 @@ tiebreaks everywhere.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -844,16 +843,9 @@ def q_pipeline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only entries through a pandas sort, which crashes on array/map
     values (r2 VERDICT #1: spans/rule_hits arrived as dicts). spans goes
     through to_json; rule_hits is rendered as a sorted k:v CSV."""
-    from ..operators.extract import extract_turns
     from ..operators.order import stable_turn_order
 
-    # native_tier=True: the correctness gate deliberately runs the round-5
-    # two-tier plan so the JVM whole-text expressions stay value-hashed
-    # against the DuckDB oracle every round (production default is the
-    # faster python-only plan — measured in bench.py --tier-split)
-    ext = stable_turn_order(
-        extract_turns(_gate_transcripts(spark, sf_dir), native_tier=True)
-    )
+    ext = stable_turn_order(_raw_pipeline_extract(spark, sf_dir))
     hits_csv = F.concat_ws(
         ",",
         F.array_sort(
@@ -878,7 +870,8 @@ def q_pipeline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _raw_pipeline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-projected flagship output (nested spans/rule_hits) for in-repo
-    consumers; the gate entry above is the scalar rendering of this."""
+    consumers; the gate entry above is the scalar rendering of this. It is
+    the default extract_turns plan, the one users run."""
     from ..operators.extract import extract_turns
 
     return extract_turns(_gate_transcripts(spark, sf_dir))
@@ -1193,16 +1186,6 @@ def q_a6_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_A6_ORACLE = """
-    SELECT user_id,
-           CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-           CAST(SUM(CASE WHEN event_type = 'login' THEN 1 ELSE 0 END) AS BIGINT) AS n_login,
-           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-           CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-    FROM events WHERE user_id < 300 GROUP BY user_id
-"""
-
-
 def q_a9_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup (hierarchical grouping sets): revenue by (status, priority),
     by status subtotal, and grand total; grouping-id marks the level."""
@@ -1282,18 +1265,6 @@ _R11_ORACLE = """
            strftime(MAX(ts), '%Y-%m-%d') AS period_end
     FROM events GROUP BY user_id
 """
-
-
-def q_a11_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL approximate distinct per group (rows-only: sketch values are
-    engine-specific; tests/test_approx.py bounds the error vs exact).
-    At 100TB this replaces exact count_distinct's full shuffle of the
-    distinct keys with fixed-size mergeable sketches."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
 
 
 def q_a8_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1567,90 +1538,3 @@ def q_mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_media_features(synth_media(spark, 120, seed=42))
 
 
-def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import frame_sample, synth_media
-
-    return frame_sample(synth_media(spark, 120, seed=42), every_n=24)
-
-
-def q_mm_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import resize_plan, synth_media
-
-    return resize_plan(synth_media(spark, 120, seed=42), 224, 224)
-
-
-QUERIES_EXT2: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "mm_media_features": q_mm_media_features,
-    "mm_frame_sample": q_mm_frame_sample,
-    "mm_resize_plan": q_mm_resize_plan,
-    "p2_column_standardize": q_p2_column_standardize,
-    "p8_user_data_detect": q_p8_user_data_detect,
-    "r10_date_from_filename": q_r10_date_from_filename,
-    "r25_key_cleanup": q_r25_key_cleanup,
-    "r1_transaction_line": q_r1_transaction_line,
-    "r2_dual_date_line": q_r2_dual_date_line,
-    "r3_deposit_withdrawal": q_r3_deposit_withdrawal,
-    "r6_payment_classification": q_r6_payment_classification,
-    "t5_capture_between_markers": q_t5_capture_between_markers,
-    "pipeline_extract": q_pipeline_extract,
-    "pipeline_quarantine": q_pipeline_quarantine,
-    "pipeline_completeness": q_pipeline_completeness,
-    "conv_rollup": q_conv_rollup,
-    "j6_asof_join": q_j6_asof_join,
-    "j7_range_join": q_j7_range_join,
-    "a6_pivot_counts": q_a6_pivot_counts,
-    "a7_percentiles": q_a7_percentiles,
-    "a8_unpivot": q_a8_unpivot,
-    "a9_rollup": q_a9_rollup,
-    "a10_cube": q_a10_cube,
-    "a11_approx_distinct": q_a11_approx_distinct,
-    "r11_last_row_provenance": q_r11_last_row_provenance,
-    "t1_line_split": q_t1_line_split,
-    "t3_block_assembly": q_t3_block_assembly,
-    "r4_amount_clean": q_r4_amount_clean,
-    "r8_year_boundary": q_r8_year_boundary,
-    "r9_statement_period": q_r9_statement_period,
-    "r12_account_number": q_r12_account_number,
-    "r24_interest_credit": q_r24_interest_credit,
-    "r18_allcaps_runs": q_r18_allcaps_runs,
-    "s4_csv_parse": q_s4_csv_parse,
-    "s_json_extract": q_s_json_extract,
-    "j5_keyword_routing": q_j5_keyword_routing,
-    "o2_truncation": q_o2_truncation,
-}
-
-ORACLES_EXT2: dict[str, str] = {
-    "pipeline_extract": _PIPELINE_EXTRACT_ORACLE,
-    "pipeline_quarantine": _PIPELINE_QUARANTINE_ORACLE,
-    "pipeline_completeness": _PIPELINE_COMPLETENESS_ORACLE,
-    "p2_column_standardize": _P2_ORACLE,
-    "conv_rollup": _CONV_ROLLUP_ORACLE,
-    "j6_asof_join": _J6_ORACLE,
-    "j7_range_join": _J7_ORACLE,
-    "a6_pivot_counts": _A6_ORACLE,
-    "a7_percentiles": _A7_ORACLE,
-    "a8_unpivot": _A8_ORACLE,
-    "a9_rollup": _A9_ORACLE,
-    "a10_cube": _A10_ORACLE,
-    "r11_last_row_provenance": _R11_ORACLE,
-    "r1_transaction_line": _R1_ORACLE,
-    "r2_dual_date_line": _R2_ORACLE,
-    "r3_deposit_withdrawal": _R3_ORACLE,
-    "r6_payment_classification": _R6_ORACLE,
-    "t5_capture_between_markers": _T5_ORACLE,
-    "p8_user_data_detect": _P8_ORACLE,
-    "r10_date_from_filename": _R10_ORACLE,
-    "r25_key_cleanup": _R25_ORACLE,
-    "t1_line_split": _T1_ORACLE,
-    "t3_block_assembly": _T3_ORACLE,
-    "r4_amount_clean": _R4_ORACLE,
-    "r8_year_boundary": _R8_ORACLE,
-    "r9_statement_period": _R9_ORACLE,
-    "r12_account_number": _R12_ORACLE,
-    "r24_interest_credit": _R24_ORACLE,
-    "r18_allcaps_runs": _R18_ORACLE,
-    "s4_csv_parse": _S4_ORACLE,
-    "s_json_extract": _SJSON_ORACLE,
-    "j5_keyword_routing": _J5_ORACLE,
-    "o2_truncation": _O2_ORACLE,
-}

@@ -27,8 +27,6 @@ _ISO = re.compile(r"^(\d{4})-(\d{2})-(\d{2})$")
 _MONTH_NAME = re.compile(r"^([A-Z][a-z]+) (\d{1,2}), (\d{4})$")
 _FILENAME_8 = re.compile(r"(\d{8})")
 
-# exported: the native expression tier (operators/native_rules.py) re-derives
-# its month ladder from the SAME tuple, so the two tiers cannot drift
 MONTH_NAMES: tuple[str, ...] = (
     "January", "February", "March", "April", "May", "June",
     "July", "August", "September", "October", "November", "December",

@@ -1,8 +1,9 @@
 """Single-turn end-to-end extraction: detect -> extract -> validate -> render.
 
 This function IS the semantics of the pipeline. The golden oracle calls it in
-plain Python; the Spark tier calls the same function inside mapInPandas
-(operators/extract.py). Byte parity between the two is therefore structural.
+plain Python; the Spark kernel (operators/extract.py, mapInArrow) calls
+extract_turn_batch, which returns exactly extract_turn's result per row.
+Byte parity between the two is therefore structural.
 
 Validity follows P5 (transaction_normalizer.py:41-65 `_is_valid_row` +
 normalize_api.py:36-56 `is_valid_transaction`): required fields

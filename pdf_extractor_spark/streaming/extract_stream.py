@@ -2,7 +2,7 @@
 
 The reference is batch-only with resume semantics (SURVEY.md §2.10); this
 module adds the continuous-ingest shape a transcript firehose needs:
-``readStream`` over the table directory -> the SAME mapInPandas extraction
+``readStream`` over the table directory -> the SAME extract_turns kernel
 (stateless per-turn rules stream trivially) -> parquet sink with its own
 checkpoint. Late data is handled where it matters — the windowed metrics
 stream — via an event-time watermark; the extraction itself is row-local and

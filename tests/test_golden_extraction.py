@@ -39,14 +39,16 @@ def oracle_frame(transcripts: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-@pytest.mark.parametrize("native_tier", [False, True])
-def test_spark_matches_oracle_byte_for_byte(spark, transcripts, native_tier):
+@pytest.mark.parametrize("path", ["extract_turns", "run_incremental"])
+def test_spark_matches_oracle_byte_for_byte(spark, transcripts, run_job, path):
     golden = oracle_frame(transcripts)
 
     sdf = spark.createDataFrame(transcripts, schema=TRANSCRIPTS)
-    out = stable_turn_order(
-        extract_turns(sdf, salt_partitions=8, native_tier=native_tier)
-    ).toPandas()
+    if path == "run_incremental":
+        ext = run_job(sdf, n_files=4).drop("src_key")
+    else:
+        ext = extract_turns(sdf, salt_partitions=8)
+    out = stable_turn_order(ext).toPandas()
 
     assert len(out) == len(golden)
     assert list(out["conv_id"]) == list(golden["conv_id"])

@@ -140,7 +140,7 @@ def _family_interleaved_corpus() -> list:
 
 def test_extract_turn_batch_matches_scalar():
     """The family-grouped batch executor (rules.oracle.extract_turn_batch,
-    used by operators/extract.py's mapInPandas/mapInArrow bodies) must be
+    used by operators/extract.py's mapInArrow kernel) must be
     byte-identical to the scalar spec on every row — including None rows,
     empty strings, and family-interleaved ordering — and must hand each
     consumer FRESH result containers (no aliasing between null rows)."""

@@ -2,7 +2,7 @@
 
 Builds the package zip, writes a small transcript table, runs the REAL
 spark-submit binary in a clean cwd (so the package can only come from the
-zip), and checks output + lineage + resume no-op.
+zip), and checks output values + lineage + resume no-op.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ def _spark_submit() -> str | None:
 
 
 @pytest.mark.slow
-def test_spark_submit_pyfiles_roundtrip(spark, tmp_path):
+def test_spark_submit_pyfiles_roundtrip(spark, tmp_path, assert_matches_oracle):
     submit = _spark_submit()
     if submit is None:
         pytest.skip("spark-submit not available")
@@ -79,5 +79,9 @@ def test_spark_submit_pyfiles_roundtrip(spark, tmp_path):
     second = submit_once()  # resume no-op
     assert second["files"] == 0
 
-    got = spark.read.parquet(str(tmp_path / "out"))
-    assert got.count() == len(pdf)
+    # the kernel as shipped in the zip: every field of every written row
+    # equals the oracle on that row's input text
+    got = spark.read.parquet(str(tmp_path / "out")).collect()
+    assert_matches_oracle(
+        got, {(r.conv_id, r.turn_idx): r.text for r in pdf.itertuples()}
+    )
