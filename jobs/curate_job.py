@@ -24,10 +24,11 @@ extraction pipeline's P5 gate):
   6. pack     — pack_sequences_distributed: token-budget bin id + offset
                 per surviving doc (the training-batch layout)
 
-Scale notes: stages 1-2 are narrow maps + the word-count shuffle; stages
-3-5 shuffle on hash/band/shingle keys only (never full text); stage 6 is
-the two-pass range-partitioned cumsum (no per-stratum reducer). Nothing
-collects rows to the driver except the final per-reason summary counts.
+Scale notes: stages 1-2 are narrow maps + the word-count shuffle; stage 3
+shuffles the quality-tagged rows once by content hash; stages 4-5 shuffle
+on band/shingle keys only (never full text); stage 6 is the two-pass
+range-partitioned cumsum (no per-stratum reducer). Nothing collects rows
+to the driver except the final per-reason summary counts.
 
 Prints one JSON summary line.
 """
@@ -46,20 +47,19 @@ def curate(
     min_words: int = 8,
     max_top_word_ppm: int = 200_000,
     max_dup_line_frac: float = 0.3,
-    stage_probe=None,
 ):
     """Run the ladder over a documents-shaped DataFrame
     (doc_id, text, lang, ...). Returns (curated_df, manifest_df) where
     curated carries (doc_id, lang, text [redacted], n_tokens, bin_id,
     bin_offset, is_eval) and manifest carries (doc_id, stage, reason).
 
-    ``stage_probe(name, df) -> df``: optional hook called with the surviving
-    relation at each stage boundary. A provided probe MUST return a
-    materialized (lineage-cut) relation — the ladder then skips its own
-    exact-dedup checkpoint, whose lineage cut the iterative components
-    stage requires (bench.py --curate and --checkpoint-stages both use
-    localCheckpoint probes). Default None keeps the single lazy production
-    plan."""
+    Every stage decides once. The quality and exact-dedup verdicts land as
+    a nullable (stage, reason) on one checkpointed relation over every
+    non-null doc; near-dedup and decontamination run once over its untagged
+    rows. The manifest comes back MATERIALIZED (localCheckpoint), so writing
+    and counting it runs nothing again; curated is the survivors minus the
+    manifest, packed, and its write re-runs no stage either."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from pdf_extractor_spark.operators.dedup import minhash_lsh_pairs
@@ -74,113 +74,78 @@ def curate(
         pack_sequences_distributed,
     )
 
-    probe = stage_probe or (lambda _name, df: df)
-    manifests = []
+    def drops(df, stage: str, reason: str):
+        return df.select("doc_id", F.lit(stage).alias("stage"), F.lit(reason).alias("reason"))
 
-    # 0. account for NULL text up front (round-5 ADVICE fix): the quality
-    # stage's word-metric join is an inner join against an exploded
-    # split(text,' ') — a NULL text yields NO exploded rows, so the doc
-    # would vanish with no manifest entry and break kept+dropped==input.
-    # Route NULL-text docs into the manifest with an explicit reason.
-    manifests.append(
-        docs.where(F.col("text").isNull()).select(
-            "doc_id", F.lit("quality").alias("stage"), F.lit("null_text").alias("reason")
-        )
-    )
-    docs = docs.where(F.col("text").isNotNull())
+    # 0. NULL text: the word-metric inner join below sees no exploded rows
+    # for it, so route it to the manifest up front or kept+dropped != input
+    null_text = drops(docs.where(F.col("text").isNull()), "quality", "null_text")
 
     # 1. PII scrub: redact in place (no drops)
-    pii = pii_columns(F.col("text"))
-    docs = docs.withColumn("text", pii["redacted"])
-
-    docs = probe("pii", docs)
-
-    # 2. quality filters (word metrics need a shuffle; line metrics ride it)
-    wm = word_repetition(docs)
-    lc = line_repetition_columns(F.col("text"))
-    feat = docs.join(wm, "doc_id").withColumn("n_lines", lc["n_lines"]).withColumn(
-        "n_dup_lines", lc["n_dup_lines"]
+    docs = docs.where(F.col("text").isNotNull()).select(
+        "doc_id", "lang", pii_columns(F.col("text"))["redacted"].alias("text")
     )
-    reason = (
+
+    # 2. quality verdict (word metrics need a shuffle; line metrics ride it)
+    lc = line_repetition_columns(F.col("text"))
+    quality = (
         F.when(F.col("rep_n_words") < min_words, F.lit("too_short"))
         .when(F.col("top_word_share_ppm") > max_top_word_ppm, F.lit("dominant_token"))
         .when(
-            F.col("n_dup_lines").cast("double")
-            > F.col("n_lines").cast("double") * max_dup_line_frac,
+            lc["n_dup_lines"].cast("double") > lc["n_lines"].cast("double") * max_dup_line_frac,
             F.lit("duplicate_lines"),
         )
     )
-    feat = feat.withColumn("drop_reason", reason)
-    manifests.append(
-        feat.where(F.col("drop_reason").isNotNull()).select(
-            "doc_id", F.lit("quality").alias("stage"), F.col("drop_reason").alias("reason")
-        )
-    )
-    docs = feat.where(F.col("drop_reason").isNull()).drop(
-        "drop_reason", "rep_n_distinct", "n_lines", "n_dup_lines", "top_word_share_ppm"
+    feat = docs.join(word_repetition(docs), "doc_id").select(
+        "doc_id", "lang", "text", quality.alias("q")
     )
 
-    docs = probe("quality", docs)
-
-    # 3. exact dedup: keep min doc_id per content hash
-    w_hash = docs.withColumn("chash", F.sha2(F.col("text"), 256))
-    keeper = w_hash.groupBy("chash").agg(F.min("doc_id").alias("keep_id"))
-    w_hash = w_hash.join(keeper, "chash")
-    manifests.append(
-        w_hash.where(F.col("doc_id") != F.col("keep_id")).select(
-            "doc_id", F.lit("exact_dedup").alias("stage"), F.lit("duplicate_content").alias("reason")
-        )
+    # 3. exact-dedup verdict over the quality survivors: keep min doc_id per
+    # content hash (a window, so the quality plan is read once)
+    keep_id = F.min(F.when(F.col("q").isNull(), F.col("doc_id"))).over(
+        Window.partitionBy(F.sha2(F.col("text"), 256))
     )
-    docs = w_hash.where(F.col("doc_id") == F.col("keep_id")).drop("chash", "keep_id")
-    docs = probe("exact_dedup", docs)
-    # the pair derivation + components below iterate over this relation; the
-    # lineage must be cut HERE or every round re-derives the whole ladder.
-    # A materializing probe's barrier already did it (checkpointing twice
-    # would write the full surviving corpus to block storage back-to-back);
-    # the check is structural, not doctrinal: a probe that did NOT leave a
-    # materialized plan (LogicalRDD / InMemoryRelation root) gets the
-    # production checkpoint anyway (round-5 review finding)
-    plan = docs._jdf.queryExecution().optimizedPlan().toString() if stage_probe else ""
-    if stage_probe is None or not any(
-        m in plan for m in ("LogicalRDD", "InMemoryRelation", "ExistingRDD")
-    ):
-        docs = docs.localCheckpoint(eager=True)
+    survives = F.col("q").isNull() & (F.col("doc_id") == F.col("keep_id"))
+    # the one cut: components iterate over it, and the manifest and curated
+    # rows both read it. Tagged rows keep no text, so it stores no more text
+    # than the survivors alone
+    cut = (
+        feat.withColumn("keep_id", keep_id)
+        .select(
+            "doc_id",
+            F.when(F.col("q").isNotNull(), F.lit("quality"))
+            .when(~survives, F.lit("exact_dedup"))
+            .alias("stage"),
+            F.coalesce(F.col("q"), F.when(~survives, F.lit("duplicate_content"))).alias("reason"),
+            F.when(survives, F.col("lang")).alias("lang"),
+            F.when(survives, F.col("text")).alias("text"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    live = F.col("stage").isNull()
+    alive = cut.where(live).select("doc_id", "lang", "text")
 
     # 4. near-dedup: LSH pairs -> components, keep canonical
-    pairs = minhash_lsh_pairs(docs, threshold=0.9, max_bucket=256)
-    comp = near_dup_components(docs.select("doc_id"), pairs)
-    docs = docs.join(comp, "doc_id")
-    manifests.append(
-        docs.where(~F.col("is_canonical")).select(
-            "doc_id", F.lit("near_dedup").alias("stage"), F.lit("near_duplicate").alias("reason")
-        )
-    )
-    docs = docs.where(F.col("is_canonical")).drop("component", "is_canonical")
-    docs = probe("near_dedup", docs)
+    pairs = minhash_lsh_pairs(alive, threshold=0.9, max_bucket=256)
+    comp = near_dup_components(alive.select("doc_id"), pairs)
 
-    # 5. decontamination vs the hash-held-out eval split
-    dec = shingle_decontaminate(docs, F.col("doc_id") % eval_mod == 0)
-    docs = docs.join(dec.select("doc_id", "is_eval", "contaminated"), "doc_id")
-    manifests.append(
-        docs.where(F.col("contaminated")).select(
-            "doc_id", F.lit("decontam").alias("stage"), F.lit("eval_overlap").alias("reason")
-        )
+    # 5. decontamination of the canonical docs vs the hash-held-out eval split
+    is_eval = F.col("doc_id") % eval_mod == 0
+    canonical = alive.join(comp.where("is_canonical"), "doc_id", "left_semi")
+    dec = shingle_decontaminate(canonical, is_eval)
+
+    manifest = (
+        null_text.unionByName(cut.where(~live).select("doc_id", "stage", "reason"))
+        .unionByName(drops(comp.where(~F.col("is_canonical")), "near_dedup", "near_duplicate"))
+        .unionByName(drops(dec.where("contaminated"), "decontam", "eval_overlap"))
+        .localCheckpoint(eager=True)
     )
-    docs = docs.where(~F.col("contaminated")).drop("contaminated")
-    docs = probe("decontam", docs)
 
     # 6. sequence packing over survivors
-    packed = pack_sequences_distributed(docs.select("doc_id", "lang", "text"), budget=pack_budget)
-    curated = probe(
-        "pack",
-        docs.join(packed.drop("lang"), "doc_id").select(
-            "doc_id", "lang", "text", "n_tokens", "bin_id", "bin_offset", "is_eval"
-        ),
+    kept = alive.join(manifest, "doc_id", "left_anti")
+    curated = kept.join(pack_sequences_distributed(kept, budget=pack_budget).drop("lang"), "doc_id").select(
+        "doc_id", "lang", "text", "n_tokens", "bin_id", "bin_offset", is_eval.alias("is_eval")
     )
-
-    manifest = manifests[0]
-    for m in manifests[1:]:
-        manifest = manifest.unionByName(m)
     return curated, manifest
 
 
@@ -193,18 +158,6 @@ def main() -> None:
     p.add_argument("--snapshot-id", default="local")
     p.add_argument("--eval-mod", type=int, default=50)
     p.add_argument("--pack-budget", type=int, default=2048)
-    p.add_argument(
-        "--checkpoint-stages",
-        action="store_true",
-        help="materialize each stage boundary (localCheckpoint). The two "
-        "sinks (curated + manifest) otherwise share lineage and recompute "
-        "it — measured 1.3-1.9x slower unstaged at 200k docs across two "
-        "windows (bench.py --curate artifacts r5_curate_200k_run{1,2}). "
-        "Default OFF: barriers write the full "
-        "surviving text per stage, the wrong trade once the corpus "
-        "exceeds cluster storage headroom; turn on when recompute is the "
-        "scarcer resource.",
-    )
     args = p.parse_args()
 
     import time
@@ -241,32 +194,19 @@ def main() -> None:
 
     docs = spark.read.parquet(args.input)
     n_in = docs.count()
-    barrier = (
-        (lambda _name, df: df.localCheckpoint(eager=True))
-        if args.checkpoint_stages
-        else None
-    )
-    curated, manifest = curate(
-        spark, docs, eval_mod=args.eval_mod, pack_budget=args.pack_budget,
-        stage_probe=barrier,
-    )
+    curated, manifest = curate(spark, docs, eval_mod=args.eval_mod, pack_budget=args.pack_budget)
     # n_out rides the write via observe() — no re-read of the output
     obs_out = Observation()
     curated = curated.observe(obs_out, F.count(F.lit(1)).alias("n"))
     curated.write.mode("overwrite").parquet(args.output)
     n_out = obs_out.get["n"]
-    # summary must describe the manifest that was WRITTEN, not a second
-    # execution of the (MinHash/components/decontam) lineage that could in
-    # principle diverge: read the parquet back when it exists, otherwise
-    # pin one execution with localCheckpoint before aggregating (r5 ADVICE)
+    # the manifest is materialized: its write and the census below read the
+    # same rows and run no stage again
     if args.manifest:
         manifest.write.mode("overwrite").parquet(args.manifest)
-        manifest_final = spark.read.parquet(args.manifest)
-    else:
-        manifest_final = manifest.localCheckpoint(eager=True)
     drops = {
         f"{r['stage']}:{r['reason']}": r["n"]
-        for r in manifest_final.groupBy("stage", "reason").agg(F.count(F.lit(1)).alias("n")).collect()
+        for r in manifest.groupBy("stage", "reason").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     summary = {
         "run_id": run_id,

@@ -55,11 +55,7 @@ def _rollup_one(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def conversation_rollup(transcripts: DataFrame) -> DataFrame:
     """groupBy(conv_id).applyInPandas rollup; see module docstring."""
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _rollup_one(pdf)
-
-    return transcripts.groupBy("conv_id").applyInPandas(run, schema=ROLLUP_SCHEMA)
+    return transcripts.groupBy("conv_id").applyInPandas(_rollup_one, schema=ROLLUP_SCHEMA)
 
 
 def _rollup_frame(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -741,19 +741,6 @@ _ORACLES: dict[str, str] = {
         ORDER BY revenue DESC, o_orderkey
         LIMIT 10
     """,
-    "w6_sessionize": """
-        WITH g AS (
-          SELECT event_id, user_id, ts,
-                 epoch(ts) - lag(epoch(ts)) OVER
-                   (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-          FROM events)
-        SELECT event_id, user_id,
-               CAST(SUM(CASE WHEN gap IS NULL OR gap > 3600 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                 AS session_id
-        FROM g
-    """,
     "st1_resume_antijoin": """
         SELECT event_id, user_id FROM events e
         WHERE NOT EXISTS (SELECT 1 FROM events s

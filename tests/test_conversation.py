@@ -52,3 +52,15 @@ def test_chain_hash_is_order_sensitive(rollup):
         if len(g) > 1 and len(set(ordered)) > 1:
             reversed_hash = chain_hash_oracle(reversed(list(ordered)))
             assert got[conv_id].chain_hash != reversed_hash
+
+
+def test_rollup_udf_has_an_inferable_eval_type(spark):
+    """applyInPandas infers the UDF's eval type from its type hints; an
+    unhinted argument makes it warn on every call."""
+    import warnings
+
+    sdf = spark.createDataFrame(generate_transcripts(n_convs=2, seed=1), schema=TRANSCRIPTS)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        conversation_rollup(sdf)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]

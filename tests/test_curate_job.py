@@ -16,6 +16,7 @@ import os
 import re
 import subprocess
 import sys
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -126,15 +127,76 @@ def test_null_text_docs_are_manifested_not_lost(spark):
     assert curated.count() + len(dropped) == 3
 
 
-def test_curate_resume_is_idempotent(tmp_path):
+def _planted_docs(spark, n_groups: int = 30):
+    """Ten docs per group g, one drop class per doc_id % 10, plus one NULL
+    text: 0 the group text (an eval doc when g % 5 == 0, eval_mod 50),
+    1 its exact copy, 2 the group text plus three tokens (near-dup), 3 ten
+    lines of which five repeat (duplicate_lines), 4 one token 40 times
+    (dominant_token), 5 three words (too_short), 6 unique plus an email,
+    7 the group text's first 12 words plus a unique tail (decontamination
+    prey when the group text is an eval doc), 8-9 unique."""
+    import random
+
+    rng = random.Random(11)
+    words = lambda n: " ".join(f"w{rng.randrange(3000):04d}" for _ in range(n))  # noqa: E731
+    rows = []
+    for g in range(n_groups):
+        base = words(60)
+        lines = [words(6) for _ in range(6)]
+        texts = [
+            base,
+            base,
+            base + f" x{g} y{g} z{g}",
+            "\n".join(lines + [lines[0]] * 4),
+            " ".join(["spam"] * 40),
+            "tiny doc here",
+            words(50) + f" contact user{g}@example.com now",
+            " ".join(base.split()[:12]) + " " + words(40),
+            words(50),
+            words(50),
+        ]
+        rows += [(10 * g + r, t, "en" if r % 3 else "de") for r, t in enumerate(texts)]
+    rows.append((10 * n_groups, None, "en"))
+    return spark.createDataFrame(rows, "doc_id long, text string, lang string")
+
+
+def test_every_drop_class_fires_on_planted_corpus(spark):
+    """Each stage's verdict on a corpus that plants every drop class: the
+    exact (stage, reason) census, every doc kept or dropped exactly once,
+    and quality deciding before exact dedup (the 30 identical spam docs and
+    the 30 identical short docs are quality drops, not duplicates)."""
+    sys.path.insert(0, str(REPO / "jobs"))
+    from curate_job import curate
+
+    docs = _planted_docs(spark)
+    curated, manifest = curate(spark, docs, eval_mod=50, pack_budget=64)
+    kept = [r.doc_id for r in curated.select("doc_id").collect()]
+    dropped = manifest.collect()
+    census = Counter(f"{r.stage}:{r.reason}" for r in dropped)
+    assert census == {
+        "quality:null_text": 1,
+        "quality:too_short": 30,
+        "quality:dominant_token": 30,
+        "quality:duplicate_lines": 30,
+        "exact_dedup:duplicate_content": 30,
+        "near_dedup:near_duplicate": 30,
+        "decontam:eval_overlap": 6,
+    }
+    ids = kept + [r.doc_id for r in dropped]
+    assert len(ids) == len(set(ids)) == docs.count()
+
+
+def test_curate_resume_is_idempotent(result, tmp_path):
     """Snapshot-atomic resume: with --lineage, a committed run is skipped
     outright on replay (run_id match), and the outputs from the first run
-    survive untouched."""
-    out, man, lin = tmp_path / "c", tmp_path / "m", tmp_path / "ledger"
+    survive untouched. The run writes no --manifest, so it also pins that
+    the census without a manifest sink equals the census of the run that
+    writes one."""
+    out, lin = tmp_path / "c", tmp_path / "ledger"
     cmd = [
         sys.executable, str(REPO / "jobs" / "curate_job.py"),
         "--input", f"{SF}/documents.parquet",
-        "--output", str(out), "--manifest", str(man),
+        "--output", str(out),
         "--lineage", str(lin), "--pack-budget", "256",
     ]
     env = {**os.environ, "PYTHONPATH": str(REPO)}
@@ -142,6 +204,7 @@ def test_curate_resume_is_idempotent(tmp_path):
     assert first.returncode == 0, first.stderr[-1500:]
     s1 = json.loads(first.stdout.strip().splitlines()[-1])
     assert s1["complete"] is True and "run_id" in s1
+    assert s1["drops"] == result[0]["drops"]
 
     second = subprocess.run(cmd, capture_output=True, text=True, cwd=str(REPO), timeout=600, env=env)
     assert second.returncode == 0, second.stderr[-1500:]
