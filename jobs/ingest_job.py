@@ -31,34 +31,37 @@ def main() -> None:
     p.add_argument("--quarantine", default=None)
     args = p.parse_args()
 
+    from pdf_extractor_spark.schema import TRANSCRIPTS
     from pdf_extractor_spark.session import get_spark
     from pdf_extractor_spark.sources.readers import read_transcripts
 
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    def append_counted(df, path: str) -> int:
+        """Append ``df`` to ``path``; its row count rides the write itself
+        via observe() (the split_extracted pattern): no second end-to-end
+        parse of the input."""
+        obs = Observation("rows")
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(path)
+        return obs.get["n"]
+
     spark = get_spark("ingest_job")
     good, quarantine = read_transcripts(spark, args.input, args.format)
-    # this run's ingested rows ride the append itself via observe() (the
-    # split_extracted pattern): no second end-to-end parse of the input.
-    # table_rows below is the cumulative post-append table size — both are
-    # reported so repeated runs stay unambiguous; the post-append count is a
-    # parquet-metadata read, not a data scan.
-    obs = Observation("ingest")
-    good.observe(obs, F.count(F.lit(1)).alias("rows_ingested")).write.mode(
-        "append"
-    ).parquet(args.output)
-    rows_ingested = obs.get["rows_ingested"]
-    n_table = spark.read.parquet(args.output).count()
-    n_bad = quarantine.count()
-    dropped = False
-    if n_bad and args.quarantine:
-        quarantine.write.mode("append").parquet(args.quarantine)
-    elif n_bad:
+    rows_ingested = append_counted(good, args.output)
+    # the cumulative post-append table size is reported too, so repeated
+    # runs stay unambiguous; with the explicit schema no inference job runs
+    # and the count reads parquet metadata, not data
+    n_table = spark.read.schema(TRANSCRIPTS).parquet(args.output).count()
+    if args.quarantine:
+        n_bad = append_counted(quarantine, args.quarantine)
+    else:
+        n_bad = quarantine.count()
+    dropped = n_bad > 0 and not args.quarantine
+    if dropped:
         # the module contract says corrupt lines never vanish silently: with
         # no --quarantine sink they ARE dropped, so say so loudly in both
         # streams rather than bury it in a count
-        dropped = True
         print(
             f"WARNING: {n_bad} corrupt lines DROPPED (no --quarantine path "
             "given); re-run with --quarantine to keep them",

@@ -59,3 +59,44 @@ def test_ingest_with_quarantine_keeps_corrupt_lines(tmp_path):
     assert summary["corrupt_lines_dropped"] is False
     assert "DROPPED" not in stderr
     assert (tmp_path / "quarantine").exists()
+
+
+def test_ingest_summary_rides_its_writes(spark, tmp_path, monkeypatch):
+    """With --quarantine, corrupt_lines comes from the quarantine append
+    itself (observe()) and table_rows from an explicit-schema read: no
+    second JSON parse and no schema-inference job. The run's Spark jobs are
+    counted under a job group: the two appends plus the table-row count."""
+    import contextlib
+    import io
+
+    from pyspark.sql import SparkSession
+
+    import jobs.ingest_job
+    import pdf_extractor_spark.session
+
+    monkeypatch.setattr(pdf_extractor_spark.session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "dump.json").write_text(GOOD + "\n" + BAD + "\n" + GOOD.replace('"c1"', '"c2"') + "\n")
+    monkeypatch.setattr(sys, "argv", [
+        "ingest_job", "--input", str(src), "--format", "json",
+        "--output", str(tmp_path / "table"), "--quarantine", str(tmp_path / "quarantine"),
+    ])
+    sc, buf = spark.sparkContext, io.StringIO()
+    sc.setJobGroup("ingest_budget", "ingest_budget")
+    try:
+        with contextlib.redirect_stdout(buf):
+            jobs.ingest_job.main()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert summary == {
+        "format": "json",
+        "rows_ingested": 2,
+        "table_rows": 2,
+        "corrupt_lines": 1,
+        "corrupt_lines_dropped": False,
+    }
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("ingest_budget"))
+    assert n_jobs <= 4, f"ingest run started {n_jobs} Spark jobs"

@@ -45,7 +45,7 @@ def test_fresh_run_processes_all(spark, dirs):
 
 
 def test_rerun_is_noop(spark, dirs):
-    assert pending_files(spark, dirs["input"], dirs["lineage"]).count() == 0
+    assert pending_files(spark, dirs["input"], dirs["lineage"])[1] == []
     summary = run_incremental(
         spark, dirs["input"], dirs["output"], dirs["lineage"], run_id="r2"
     )
@@ -59,8 +59,8 @@ def test_crash_resume_reprocesses_only_missing(spark, dirs):
     survivors = lin.where(F.col("partition_range") != victim)
     # simulate crash-before-commit: rewrite lineage without the victim's row
     survivors.write.mode("overwrite").parquet(dirs["lineage"] + "_partial")
-    pend = pending_files(spark, dirs["input"], dirs["lineage"] + "_partial")
-    assert [r.src_key for r in pend.collect()] == [victim]
+    _, pend = pending_files(spark, dirs["input"], dirs["lineage"] + "_partial")
+    assert pend == [victim]
     victim_rows = (
         spark.read.parquet(dirs["output"]).where(F.col("src_key") == victim).count()
     )
@@ -114,7 +114,7 @@ def test_new_files_processed_incrementally(spark, dirs):
     assert summary["rows"] == len(extra)
     out = spark.read.parquet(dirs["output"])
     assert out.count() == dirs["n_rows"] + len(extra)
-    assert pending_files(spark, dirs["input"], dirs["lineage"]).count() == 0
+    assert pending_files(spark, dirs["input"], dirs["lineage"])[1] == []
 
 
 def test_auto_salt_defuses_whale_file(spark, tmp_path):
@@ -210,3 +210,99 @@ def test_auto_salt_fires_on_incremental_whale_after_committed_files(spark, tmp_p
     part_dir = pathlib.Path(whale_key.replace("file://", "")).parent
     n_files = len(list(part_dir.glob("*.parquet")))
     assert n_files > 1, f"auto-salt skipped on incremental whale ({n_files} file)"
+
+
+def _job_ids(spark, group: str, fn):
+    """Run ``fn()`` under job group ``group``; return (its result, the Spark
+    job ids it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return res, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_append_prunes_committed_files_within_job_budget(spark, tmp_path, assert_matches_oracle):
+    """An append run must drop committed files before the scan, not after
+    it: with every committed input file overwritten by non-parquet bytes the
+    run still succeeds and extracts exactly the one new file — any scan or
+    listing pass that opened a committed file would fail to read it. The
+    same run stays under a fixed budget of Spark jobs."""
+    import pathlib
+
+    inp, out, lin = (str(tmp_path / d) for d in ("input", "out", "lin"))
+    base = generate_transcripts(n_convs=20, seed=5)
+    spark.createDataFrame(base, schema=TRANSCRIPTS).repartition(3).write.parquet(inp)
+    run_incremental(spark, inp, out, lin, run_id="r1")
+    committed = sorted(pathlib.Path(inp).glob("*.parquet"))
+    assert len(committed) == 3
+    for f in committed:
+        f.write_bytes(b"not parquet")
+    extra = generate_transcripts(n_convs=4, seed=77)
+    spark.createDataFrame(extra, schema=TRANSCRIPTS).coalesce(1).write.mode(
+        "append"
+    ).parquet(inp)
+    (new,) = {f.name for f in pathlib.Path(inp).glob("*.parquet")} - {f.name for f in committed}
+
+    summary, jobs = _job_ids(
+        spark, "append_budget", lambda: run_incremental(spark, inp, out, lin, run_id="r2")
+    )
+    assert summary == {"files": 1, "rows": len(extra)}
+    rows = spark.read.parquet(f"{out}/src_key={new}").collect()
+    assert_matches_oracle(rows, {(c, int(i)): t for c, i, t in zip(extra.conv_id, extra.turn_idx, extra.text)})
+    assert len(jobs) <= 6, f"append run started {len(jobs)} Spark jobs"
+
+
+def test_special_character_file_names(spark, tmp_path, assert_matches_oracle):
+    """src_key is the file name as input_file_name() spells it (URL-encoded);
+    the output partition dir is that key escaped by Spark's partition
+    writer. Both spellings, the resume no-op and the values must survive
+    names that URL-encoding, path escaping and path globbing all treat
+    specially."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    inp, out, lin = (tmp_path / d for d in ("input", "out", "lin"))
+    inp.mkdir()
+    names = ["a b.parquet", "p%q.parquet", "a#b.parquet", "x[1].parquet", "k=v.parquet", "ünï€.parquet"]
+    pdf = generate_transcripts(n_convs=12, seed=31)
+    convs = sorted(set(pdf.conv_id))
+    for i, name in enumerate(names):
+        part = pdf[pdf.conv_id.isin(convs[i :: len(names)])]
+        pq.write_table(
+            pa.Table.from_pandas(part, schema=to_arrow_schema(TRANSCRIPTS), preserve_index=False),
+            inp / name,
+        )
+    first = run_incremental(spark, str(inp), str(out), str(lin), run_id="r1")
+    assert first == {"files": len(names), "rows": len(pdf)}
+    assert run_incremental(spark, str(inp), str(out), str(lin), run_id="r2") == {"files": 0, "rows": 0}
+    assert {p.name for p in out.iterdir() if p.is_dir()} == {
+        "src_key=a%2520b.parquet",
+        "src_key=p%2525q.parquet",
+        "src_key=a%2523b.parquet",
+        "src_key=x%255B1%255D.parquet",
+        "src_key=k%3Dv.parquet",
+        "src_key=ünï€.parquet",
+    }
+    lin_keys = {r[0] for r in spark.read.parquet(str(lin)).select("partition_range").collect()}
+    assert lin_keys == {"a%20b.parquet", "p%25q.parquet", "a%23b.parquet", "x%5B1%5D.parquet", "k=v.parquet", "ünï€.parquet"}
+    rows = spark.read.parquet(str(out)).collect()
+    assert_matches_oracle(rows, {(c, int(i)): t for c, i, t in zip(pdf.conv_id, pdf.turn_idx, pdf.text)})
+
+
+def test_empty_input_file_commits_with_zero_counts(spark, tmp_path):
+    """A zero-row parquet file in the input writes no output partition: the
+    stats read-back must not look for one, and the file still commits (with
+    zero counts), so re-running the complete run is a no-op."""
+    inp, out, lin = (str(tmp_path / d) for d in ("input", "out", "lin"))
+    pdf = generate_transcripts(n_convs=3, seed=13)
+    spark.createDataFrame(pdf, schema=TRANSCRIPTS).coalesce(1).write.parquet(inp)
+    spark.createDataFrame([], TRANSCRIPTS).coalesce(1).write.mode("append").parquet(inp)
+    assert run_incremental(spark, inp, out, lin, run_id="r1") == {"files": 2, "rows": len(pdf)}
+    assert spark.read.parquet(out).count() == len(pdf)
+    counts = sorted(r[0] for r in spark.read.parquet(lin).select("row_count").collect())
+    assert counts == [0, len(pdf)]
+    assert run_incremental(spark, inp, out, lin, run_id="r2") == {"files": 0, "rows": 0}

@@ -49,8 +49,8 @@ def test_distributed_ids_single_partition_edge(spark):
 
 def test_lineage_resume_at_1000_files(spark, tmp_path):
     """ST1 at the documented scale unit: 1000 input files; a partially
-    committed run resumes exactly the uncommitted files via the broadcast
-    anti-join (no driver-side file list)."""
+    committed run resumes exactly the uncommitted files (pending set from
+    the file index, scan pruned at file listing)."""
     input_dir = str(tmp_path / "input")
     (
         spark.range(4000)
@@ -66,7 +66,7 @@ def test_lineage_resume_at_1000_files(spark, tmp_path):
         .write.parquet(input_dir)
     )
     out_dir, lin_dir = str(tmp_path / "out"), str(tmp_path / "lineage")
-    assert pending_files(spark, input_dir, lin_dir).count() == 1000
+    assert len(pending_files(spark, input_dir, lin_dir)[1]) == 1000
     s1 = run_incremental(spark, input_dir, out_dir, lin_dir, run_id="big1")
     assert s1["files"] == 1000 and s1["rows"] == 4000
     # drop 25 lineage commits -> exactly those files pend, and the resume
@@ -76,8 +76,8 @@ def test_lineage_resume_at_1000_files(spark, tmp_path):
     lin.where(~F.col("partition_range").isin(*victims)).write.mode("overwrite").parquet(
         lin_dir + "_p"
     )
-    pend = pending_files(spark, input_dir, lin_dir + "_p")
-    assert {r.src_key for r in pend.collect()} == victims
+    _, pend = pending_files(spark, input_dir, lin_dir + "_p")
+    assert set(pend) == victims
     s2 = run_incremental(spark, input_dir, out_dir, lin_dir + "_p", run_id="big2")
     assert s2["files"] == 25
     out = spark.read.parquet(out_dir)
