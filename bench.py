@@ -53,7 +53,6 @@ def _headline():
         ("sim_ivf_topk", catalog_ext.q_sim_ivf_topk),
         # round-2 pipeline ops
         ("dedup_components", llm_extras.q_dedup_components),
-        ("dedup_components_star", llm_extras.q_dedup_components_star),
         ("pack_sequences", llm_extras.q_pack_sequences),
         ("sample_stratified", llm_extras.q_sample_stratified),
         ("tfidf_topk", llm_extras.q_tfidf_topk),
@@ -613,279 +612,6 @@ def curate_bench(n_docs: int = 200_000) -> None:
     )
 
 
-def _eventlog_metrics(log_dir: str) -> dict:
-    """Aggregate shuffle/spill/peak-memory metrics from a Spark event log:
-    the honest way to observe executor pressure without the UI (disabled
-    here) — every task's metrics are in the JSONL event stream."""
-    import glob
-    import json as _json
-
-    tot = {
-        "shuffle_write_bytes": 0,
-        "shuffle_read_bytes": 0,
-        "memory_spill_bytes": 0,
-        "disk_spill_bytes": 0,
-        "peak_execution_memory_max": 0,
-        "tasks": 0,
-    }
-    for path in glob.glob(f"{log_dir}/**", recursive=True):
-        if path.endswith(".inprogress") or not os.path.isfile(path):
-            continue
-        with open(path) as f:
-            for line in f:
-                if '"SparkListenerTaskEnd"' not in line:
-                    continue
-                ev = _json.loads(line)
-                m = ev.get("Task Metrics") or {}
-                if not m:
-                    continue
-                tot["tasks"] += 1
-                tot["shuffle_write_bytes"] += (m.get("Shuffle Write Metrics") or {}).get(
-                    "Shuffle Bytes Written", 0
-                )
-                rd = m.get("Shuffle Read Metrics") or {}
-                tot["shuffle_read_bytes"] += rd.get("Local Bytes Read", 0) + rd.get(
-                    "Remote Bytes Read", 0
-                )
-                tot["memory_spill_bytes"] += m.get("Memory Bytes Spilled", 0)
-                tot["disk_spill_bytes"] += m.get("Disk Bytes Spilled", 0)
-                tot["peak_execution_memory_max"] = max(
-                    tot["peak_execution_memory_max"], m.get("Peak Execution Memory", 0)
-                )
-    return tot
-
-
-def _components_pressure_child(algo: str, level: str, n_edges: int) -> None:
-    """One (algorithm, checkpoint-storage-level) cell at the heap the parent
-    set via SPARK_GRAFT_DRIVER_MEM: fresh JVM, event-log metrics, ONE JSON
-    line on stdout. Run as a subprocess so a heap OOM is a recorded result,
-    not a dead bench."""
-    import shutil
-    import tempfile
-
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.plans.llm_extras import (
-        near_dup_components,
-        near_dup_components_star,
-    )
-    from pdf_extractor_spark.session import get_spark
-
-    log_dir = tempfile.mkdtemp(prefix="cmp_evt_")
-    spark = get_spark(
-        f"pressure_{algo}_{level}",
-        master=f"local[{CPUS}]",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": f"file://{log_dir}",
-            # Spark 4 defaults to rolling zstd logs; plain single-file
-            # JSONL keeps the parser dependency-free
-            "spark.eventLog.rolling.enabled": "false",
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        docs = spark.range(n_edges + 1).select(F.col("id").alias("doc_id"))
-        chain = (
-            spark.range(n_edges)
-            .select(F.col("id").alias("d1"), (F.col("id") + 1).alias("d2"))
-            .repartition(int(CPUS) * 2)
-            .localCheckpoint(eager=True)
-        )
-        fn = near_dup_components if algo == "propagation" else near_dup_components_star
-        lvl = StorageLevel.DISK_ONLY if level == "disk_only" else None
-        stats: dict = {}
-        t0 = time.perf_counter()
-        out = fn(docs, chain, stats=stats, round_storage_level=lvl)
-        chk = out.agg(
-            F.sum("component").alias("s"), F.countDistinct("component").alias("c")
-        ).collect()[0]
-        sec = round(time.perf_counter() - t0, 3)
-        spark.stop()  # flushes the event log
-        met = _eventlog_metrics(log_dir)
-        print(
-            json.dumps(
-                {
-                    "status": "ok",
-                    "sec": sec,
-                    "rounds": stats.get("rounds"),
-                    "n_components": int(chk["c"]),
-                    "checksum": int(chk["s"]),
-                    "shuffle_write_gb": round(met["shuffle_write_bytes"] / 2**30, 3),
-                    "shuffle_read_gb": round(met["shuffle_read_bytes"] / 2**30, 3),
-                    "memory_spill_gb": round(met["memory_spill_bytes"] / 2**30, 3),
-                    "disk_spill_gb": round(met["disk_spill_bytes"] / 2**30, 3),
-                    "peak_task_execution_memory_mb": round(
-                        met["peak_execution_memory_max"] / 2**20, 1
-                    ),
-                    "tasks": met["tasks"],
-                }
-            )
-        )
-    finally:
-        shutil.rmtree(log_dir, ignore_errors=True)
-
-
-def _pressure_cell(algo: str, level: str, heap: str, n_edges: int) -> dict:
-    """Run one components_pressure cell in a child JVM. An OOM, a crash or
-    a timeout is the cell's recorded status, never an exception."""
-    row = {"algo": algo, "round_checkpoint_level": level, "heap": heap}
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM=heap, SPARK_GRAFT_ARTIFACT_DIR="")
-    try:
-        proc = subprocess.run(
-            [sys.executable, __file__, "--components-pressure-child", algo, level, str(n_edges)],
-            capture_output=True,
-            text=True,
-            env=env,
-            timeout=1800,
-        )
-    except subprocess.TimeoutExpired:
-        row["status"] = "timeout"
-        return row
-    line = next(
-        (l for l in proc.stdout.splitlines() if l.startswith('{"status"')), None
-    )
-    if proc.returncode == 0 and line:
-        row.update(json.loads(line))
-    else:
-        err = (proc.stderr or "")[-4000:]
-        row["status"] = (
-            "OOM" if "OutOfMemoryError" in err or "OutOfMemoryError" in proc.stdout else f"failed rc={proc.returncode}"
-        )
-        # the last ERROR line tells WHERE it died (stage = which round)
-        err_lines = [l for l in err.splitlines() if "ERROR" in l or "Error" in l]
-        row["error_tail"] = err_lines[-1][:300] if err_lines else err[-300:]
-    return row
-
-
-def components_pressure(n_edges: int = 10_000_000) -> None:
-    """Components near the sandbox's memory envelope (r4 VERDICT #8): a
-    10^7-edge seeded chain graph (adversarial diameter) across a
-    (algorithm x heap x per-round-checkpoint-storage-level) grid, each cell
-    a fresh subprocess JVM so an OutOfMemoryError is RECORDED as the
-    envelope instead of killing the bench. Executor metrics (shuffle
-    read/write, spill, peak task memory) come from the Spark event log.
-    The grid answers the judge's question directly: which tier degrades
-    first as memory shrinks, and which knob (round_storage_level=DISK_ONLY
-    on the iterative checkpoints) restores it."""
-    load_start = _loadavg()
-    cells = [
-        ("propagation", "default", "8g"),
-        ("star", "default", "8g"),
-        ("propagation", "disk_only", "8g"),
-        ("star", "disk_only", "8g"),
-        ("propagation", "default", "32g"),
-        ("star", "default", "32g"),
-    ]
-    results = []
-    for algo, level, heap in cells:
-        row = _pressure_cell(algo, level, heap, n_edges)
-        results.append(row)
-        print(json.dumps(row))
-    oks = [
-        (r["checksum"], r["n_components"]) for r in results if r.get("status") == "ok"
-    ]
-    _emit(
-        {
-            "metric": "components_memory_pressure",
-            "value": sum(r["sec"] for r in results if r.get("status") == "ok"),
-            "unit": "sec",
-            "n_edges": n_edges,
-            "results": results,
-            "agreement": "ok" if len(set(oks)) <= 1 else "MISMATCH",
-            "cpus": int(CPUS),
-            "window": _window_health(load_start),
-        }
-    )
-
-
-def components_chain(sizes: tuple[int, ...] = (2_000, 20_000, 200_000)) -> None:
-    """Adversarial-graph components bench (r3 VERDICT #5): min-label
-    propagation (+pointer jumping) vs Large-Star/Small-Star on LONG-CHAIN
-    pair graphs — the exact graph class the star variant exists for
-    (diameter = n-1; near-dup graphs from template drift look like this) —
-    plus a short-diameter clusters control where propagation's cheaper
-    per-round plan should win. Reports rounds-to-converge and wall per
-    (graph, algo) and cross-checks that both algorithms produce the
-    identical min-labelled components (sum + count checksum)."""
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.plans.llm_extras import (
-        near_dup_components,
-        near_dup_components_star,
-    )
-    from pdf_extractor_spark.session import get_spark
-
-    load_start = _loadavg()
-    spark = get_spark("chain", master=f"local[{CPUS}]")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    graphs = []
-    for n in sizes:
-        docs = spark.range(n).select(F.col("id").alias("doc_id"))
-        chain = spark.range(n - 1).select(
-            F.col("id").alias("d1"), (F.col("id") + 1).alias("d2")
-        )
-        graphs.append((f"chain_{n}", docs, chain))
-    # control at the largest size: same node count, diameter-2 clusters of 10
-    # (hub-and-spoke), the shape dense near-dup clusters actually have
-    n = sizes[-1]
-    docs = spark.range(n).select(F.col("id").alias("doc_id"))
-    clusters = (
-        spark.range(n)
-        .where(F.col("id") % 10 != 0)
-        .select((F.col("id") - F.col("id") % 10).alias("d1"), F.col("id").alias("d2"))
-    )
-    graphs.append((f"clusters10_{n}", docs, clusters))
-
-    rows = []
-    mismatches = []
-    for gname, gdocs, gpairs in graphs:
-        gpairs = gpairs.localCheckpoint(eager=True)  # generation outside the timing
-        checks = {}
-        for aname, fn in (
-            ("propagation", near_dup_components),
-            ("star", near_dup_components_star),
-        ):
-            stats: dict = {}
-            t0 = time.perf_counter()
-            out = fn(gdocs, gpairs, stats=stats)
-            # the checksum agg forces full computation and doubles as the
-            # cross-algorithm agreement check (both label by component min,
-            # so identical labelings => identical sum + distinct count)
-            chk = out.agg(
-                F.sum("component").alias("s"),
-                F.countDistinct("component").alias("c"),
-            ).collect()[0]
-            sec = time.perf_counter() - t0
-            checks[aname] = (int(chk["s"]), int(chk["c"]))
-            rows.append(
-                {
-                    "graph": gname,
-                    "algo": aname,
-                    "sec": round(sec, 3),
-                    "rounds": stats.get("rounds"),
-                    "n_components": int(chk["c"]),
-                }
-            )
-        if checks["propagation"] != checks["star"]:
-            mismatches.append({"graph": gname, "checksums": checks})
-    spark.stop()
-    _emit(
-        {
-            "metric": "components_chain_bench",
-            "value": round(sum(r["sec"] for r in rows), 3),
-            "unit": "sec",
-            "results": rows,
-            "agreement": "ok" if not mismatches else mismatches,
-            "cpus": int(CPUS),
-            "window": _window_health(load_start),
-        }
-    )
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 2 and sys.argv[1] == "--scaling-child":
         print(json.dumps(_scaling_child(int(sys.argv[2]), SF_DIR)))
@@ -898,14 +624,5 @@ if __name__ == "__main__":
         skew_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 120_000)
     elif len(sys.argv) > 1 and sys.argv[1] == "--curate":
         curate_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 200_000)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--components-pressure-child":
-        _components_pressure_child(sys.argv[2], sys.argv[3], int(sys.argv[4]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--components-pressure":
-        components_pressure(int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--components-chain":
-        if len(sys.argv) > 2:
-            components_chain(tuple(int(x) for x in sys.argv[2:]))
-        else:
-            components_chain()
     else:
         main()

@@ -30,156 +30,12 @@ def near_dup_components(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    stats: dict | None = None,
-    round_storage_level=None,
 ) -> DataFrame:
-    """Connected components over a near-dup pair relation by iterative
-    min-label propagation: every node starts as its own component; each round
-    every node takes the min label among itself and its neighbors; monotone
-    decreasing integer labels => converges in <= diameter rounds.
-
-    Scale notes: this simple propagation is fine for the short-diameter
-    components near-dup graphs produce (dup clusters are dense, diameter
-    2-3); for adversarial long-chain graphs use the alternating
-    Large-Star/Small-Star formulation, which converges in O(log n) rounds.
-    Each round is one shuffle on the edge key. The loop is a driver-side
-    while with a single scalar agg as the convergence test — no data is
-    collected.
-
-    Pair endpoints absent from ``docs`` (legal when the pair relation is
-    derived from a superset) participate in propagation as real graph nodes
-    — they can bridge doc components and may supply the component min —
-    but only ``docs`` nodes appear in the output (round-4 review fix: they
-    previously leaked into the output AND their label changes were
-    invisible to the convergence metric, so 'a—x—b' with x outside docs
-    could converge early with a,b in different components).
-    """
-    from pyspark.sql import Observation
-
-    doc_nodes = docs.select(F.col(id_col).alias("node")).distinct()
-    # bidirect via explode, not union-of-self-projections: ONE scan of the
-    # pair relation instead of two, and it sidesteps a Spark 4.1 analyzer
-    # crash (UnionBase.rewriteConstraints: "key not found") when the caller
-    # passes a localCheckpointed pair relation — both union branches then
-    # share the LogicalRDD's attribute ids and the constraint rewrite maps
-    # one branch's attributes only
-    bidirected = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("d1").alias("a"), F.col("d2").alias("b")),
-                    F.struct(F.col("d2").alias("a"), F.col("d1").alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .distinct()
-    )
-    # every graph node propagates: docs nodes PLUS pair endpoints outside
-    # docs (see docstring) — the self-loop set is the node universe, and
-    # self-loops give every node an old_comp so the convergence metric
-    # counts every label change
-    nodes = doc_nodes.union(bidirected.select(F.col("a").alias("node"))).distinct()
-    edges = (
-        bidirected
-        # self-loops fold the "keep my own label" left-join into the
-        # neighbor-min aggregation: min over {self} ∪ neighbors in ONE
-        # groupBy — one fewer shuffle of the label relation per round
-        .union(nodes.select(F.col("node").alias("a"), F.col("node").alias("b")))
-        # materialize ONCE: the edge relation feeds every propagation round,
-        # and recomputing it would re-run the (expensive) near-dup pair
-        # derivation — e.g. the full MinHash signature pass — per iteration
-        .localCheckpoint(eager=True)
-    )
-    labels = nodes.select("node", F.col("node").alias("comp"))
-    rounds = 0
-    while True:
-        rounds += 1
-        new = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy("a")
-            .agg(
-                F.min("comp").alias("comp"),
-                # the self-loop row (a,a) carries a's previous label: a
-                # conditional min in the SAME agg recovers it for the
-                # convergence metric without touching the old labels again
-                F.min(F.when(F.col("b") == F.col("a"), F.col("comp"))).alias(
-                    "old_comp"
-                ),
-            )
-            .select(F.col("a").alias("node"), "old_comp", "comp")
-        )
-        # pointer-jumping compression: also adopt the label OF my label
-        # (comp[comp]) — turns O(diameter) rounds into O(log diameter); the
-        # join is tiny (labels x labels on the label key)
-        lbl = new.select(F.col("node").alias("lnode"), F.col("comp").alias("lcomp"))
-        new = (
-            new.join(lbl, new.comp == F.col("lnode"), "left")
-            .select(
-                "node",
-                "old_comp",
-                F.least(F.col("comp"), F.coalesce("lcomp", F.col("comp"))).alias("comp"),
-            )
-        )
-        # convergence test rides the checkpoint job: old_comp is carried
-        # through the round's plan, so sum(comp != old_comp) costs nothing
-        # extra — no per-round join against the previous labels and no
-        # separate probe job (labels are monotone decreasing, so a round
-        # with zero changes is THE fixed point)
-        obs = Observation()
-        new = new.observe(obs, F.sum((F.col("comp") != F.col("old_comp")).cast("long")).alias("changed"))
-        # cut the iterative lineage. round_storage_level=DISK_ONLY is the
-        # memory-envelope knob (bench.py --components-pressure): per-round
-        # checkpoint blocks otherwise accumulate on the heap across rounds
-        # faster than the context cleaner reclaims them — at 10^7 edges and
-        # an 8g driver that OOMs around round 20; disk-backed rounds bound
-        # heap at the cost of one round-relation write+read per iteration
-        new = new.localCheckpoint(eager=True, storageLevel=round_storage_level)
-        # sum() over ZERO rows observes NULL, not 0 (empty input previously
-        # looped forever here) — an empty relation is trivially converged
-        changed = obs.get["changed"] or 0
-        labels = new.drop("old_comp")
-        if changed == 0:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    return _restrict_with_canonical(labels.join(doc_nodes, "node"), id_col)
-
-
-def _restrict_with_canonical(labels: DataFrame, id_col: str) -> DataFrame:
-    """Output clause shared by both component variants: restrict to docs
-    nodes and derive is_canonical = (node == min node over component AMONG
-    DOCS MEMBERS). When pairs come from a superset of docs, the propagated
-    component label can be a foreign node id — comparing node against the
-    label directly would then leave the whole component with no canonical
-    row, and a keep-canonical consumer (curate stage 4) would drop it
-    (round-5 review fix). The component label itself stays the global
-    (possibly foreign) min — it is an arbitrary group id; canonical-ness is
-    a docs-relative property. groupBy+join rather than a window: the
-    per-component min has map-side partial agg and no single-partition
-    funnel for a giant boilerplate component."""
-    cmin = labels.groupBy("comp").agg(F.min("node").alias("canon"))
-    return labels.join(cmin, "comp").select(
-        F.col("node").alias(id_col),
-        F.col("comp").alias("component"),
-        (F.col("node") == F.col("canon")).alias("is_canonical"),
-    )
-
-
-def near_dup_components_star(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    stats: dict | None = None,
-    round_storage_level=None,
-) -> DataFrame:
-    """Connected components by alternating Large-Star/Small-Star rounds
-    (Kiveris et al., 'Connected Components in MapReduce and Beyond'): the
-    adversarial-graph variant promised by near_dup_components' docstring.
-    Propagation needs O(diameter) rounds (pointer-jumping: O(log diameter));
-    star operations converge in O(log^2 n) WITHOUT assuming short diameter —
-    the safe choice when the near-dup graph has long chains (e.g. template
-    drift where doc_i ~ doc_{i+1} but doc_0 !~ doc_n).
+    """Connected components over a near-dup pair relation by alternating
+    Large-Star/Small-Star rounds (Kiveris et al., 'Connected Components in
+    MapReduce and Beyond', SoCC 2014). Star operations converge in
+    O(log^2 n) rounds without assuming a short diameter; MinHash near-dup
+    graphs (dense clusters, diameter 2-3) converge in about two.
 
       large-star: for each node u, every strictly-larger neighbor v gets an
         edge to m = min(neighbors(u) + {u});
@@ -193,14 +49,23 @@ def near_dup_components_star(
     jobs as observe() metrics (zero extra jobs); the left-anti inclusion
     probe only runs on rounds whose counts match — i.e. (coincidences
     aside) exactly once, at the fixed point — and AQE broadcasts its small
-    side, where the old exceptAll pair shuffled both full sets per round."""
+    side, where an exceptAll would shuffle both full sets every round.
+
+    Pair endpoints absent from ``docs`` (legal when the pair relation is
+    derived from a superset) are real graph nodes: they can bridge doc
+    components and may supply the component label. Only ``docs`` nodes
+    appear in the output, and is_canonical is docs-relative (see the
+    output clause)."""
     from pyspark.sql import Observation
 
     nodes = docs.select(F.col(id_col).alias("node")).distinct()
     obs0 = Observation()
-    # explode-bidirect for the same two reasons as near_dup_components:
-    # one input scan, and no union-of-self-projections over a possibly
-    # checkpointed pair relation (Spark 4.1 rewriteConstraints crash)
+    # bidirect via explode, not union-of-self-projections: ONE scan of the
+    # pair relation instead of two, and it sidesteps a Spark 4.1 analyzer
+    # crash (UnionBase.rewriteConstraints: "key not found") when the caller
+    # passes a localCheckpointed pair relation — both union branches then
+    # share the LogicalRDD's attribute ids and the constraint rewrite maps
+    # one branch's attributes only
     edges = (
         pairs.select(
             F.explode(
@@ -217,9 +82,7 @@ def near_dup_components_star(
         .localCheckpoint(eager=True)
     )
     n_edges = obs0.get["n"]
-    rounds = 0
     while True:
-        rounds += 1
         # large-star over the bidirected relation. bid KEEPS its distinct:
         # both consumers (lmin's groupBy and the lm join) shuffle on u, so
         # the distinct's exchange is planned once and REUSED — dropping it
@@ -262,8 +125,7 @@ def near_dup_components_star(
             attach_neighbors.union(attach_self)
             .distinct()
             .observe(obs, F.count(F.lit(1)).alias("n"))
-            # round_storage_level: same memory-envelope knob as propagation
-            .localCheckpoint(eager=True, storageLevel=round_storage_level)
+            .localCheckpoint(eager=True)
         )
         n_new = obs.get["n"]
         converged = False
@@ -275,23 +137,26 @@ def near_dup_components_star(
         edges, n_edges = new, n_new
         if converged:
             break
-    if stats is not None:
-        stats["rounds"] = rounds
     # at convergence the edge set is a forest of stars (u -> component min)
     parents = edges.groupBy("u").agg(F.min("v").alias("root"))
     labels = nodes.join(parents, nodes.node == parents.u, "left").select(
         "node", F.coalesce("root", F.col("node")).alias("comp")
     )
-    return _restrict_with_canonical(labels, id_col)
-
-
-def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-variant components over the same bounded MinHash+LSH pair
-    relation (bench sibling of q_dedup_components; equality pinned by
-    tests/test_components_star.py, oracle shared via the equality)."""
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    pairs = minhash_lsh_pairs(docs, threshold=0.9)
-    return near_dup_components_star(docs.select("doc_id"), pairs)
+    # is_canonical = (node == min node over the component AMONG DOCS
+    # MEMBERS). When pairs come from a superset of docs, the component label
+    # can be a foreign node id — comparing node against the label directly
+    # would then leave the whole component with no canonical row, and a
+    # keep-canonical consumer (curate's near-dedup stage) would drop it. The
+    # label itself stays the global (possibly foreign) min: it is an
+    # arbitrary group id. groupBy+join rather than a window: the
+    # per-component min has map-side partial agg and no single-partition
+    # funnel for a giant boilerplate component.
+    cmin = labels.groupBy("comp").agg(F.min("node").alias("canon"))
+    return labels.join(cmin, "comp").select(
+        F.col("node").alias(id_col),
+        F.col("comp").alias("component"),
+        (F.col("node") == F.col("canon")).alias("is_canonical"),
+    )
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -87,17 +87,19 @@ def _audited():
             "k:v CSV rule_hits) rides the final Project.",
         ),
         (
-            "near_dup_components_star",
-            llm_extras.q_dedup_components_star,
+            "dedup_components",
+            llm_extras.q_dedup_components,
             "each star round = two hash shuffles on the node key "
             "(large-star groupBy + small-star groupBy) over the edge "
-            "relation only; labels never fan out through a window. Since r4 "
-            "the convergence cardinalities ride the round's checkpoint job "
-            "as observe() metrics and the one-sided left_anti inclusion "
-            "probe runs only when counts match (broadcast by AQE); edge "
-            "relations are localCheckpointed per round to cut iterative "
-            "lineage. NOTE: plan below is round 1 of the iteration (the "
-            "driver loop materializes per round).",
+            "relation only; labels never fan out through a window. The "
+            "convergence cardinalities ride the round's checkpoint job as "
+            "observe() metrics and the one-sided left_anti inclusion probe "
+            "runs only when counts match (broadcast by AQE); edge relations "
+            "are localCheckpointed per round to cut iterative lineage. NOTE: "
+            "the driver loop runs every round while the DataFrame is built, "
+            "so the plan below is the output clause only: docs nodes "
+            "left-joined to the converged star forest (Scan ExistingRDD), "
+            "then the docs-relative canonical min as a groupBy joined back.",
         ),
         (
             "text_decontaminate",
